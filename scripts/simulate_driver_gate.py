@@ -1,10 +1,9 @@
 #!/usr/bin/env python
-"""Execute the external driver's CORRECTNESS gate locally: the FIRST 50
-registered queries (registration order = the staleness-tier schedule in
-spark_graft/__init__.py) run on Spark AND as oracle SQL on DuckDB at
-sf0.01, through the same strict comparator the driver uses. Run this
-before round end so every tier-0/tier-1 query is known-green on the
-exact gate that grades it.
+"""Run a correctness gate locally: the first N registered queries
+(registration order is module import order, see
+spark_graft.load_all_queries), or the named ones, run through
+__spark_entry__ on a plain SparkSession AND as oracle SQL on DuckDB at
+sf0.01, compared by tests/compare.py's strict comparator.
 
     python scripts/simulate_driver_gate.py [--sf-dir /root/testdata/sf0.01]
                                            [--n 50]

@@ -23,117 +23,9 @@ from spark_graft.registry import REGISTRY, QuerySpec, query
 __all__ = ["REGISTRY", "QuerySpec", "query", "load_all_queries"]
 
 
-# The external driver's per-round correctness budget hash-checks only
-# the FIRST ~50 registered queries, so registration order is a
-# verification SCHEDULE. load_all_queries() orders the registry by
-# staleness tier:
-#   tier 0 — never driver-verified, or modified this round (an edit to
-#            a query fn or its oracle invalidates prior verification,
-#            so edited queries must re-enter the window);
-#   tier 1 — hash-green last in CORRECTNESS_r15 (3 rounds stale,
-#            highest priority among unmodified queries);
-#   tier 2 — hash-green last in CORRECTNESS_r16 (2 rounds stale);
-#   tier 3 — hash-green in CORRECTNESS_r17 on code unchanged since.
-# Refresh these sets from CORRECTNESS_r{N}.json at the start of each
-# round, and add every query touched during the round to
-# _MODIFIED_THIS_ROUND.
-
-# Queries whose implementation changed during ROUND 18 — tier 0, the
-# driver must re-verify them on the new code:
-# - pipeline_curriculum, udf_pandas_tokens: NULL-text hardening
-#   (VERDICT r17 item 2, 2 of the 6 queries FIXTURES.md still flags).
-#   pipeline_curriculum counts NULL text as ZERO tokens on both
-#   engines (the unhardened form both dropped NULL rows from the
-#   equi-join AND shifted every stage boundary differently — Spark
-#   windows order NULLS FIRST, DuckDB NULLS LAST);
-#   udf_pandas_tokens's pandas UDF goes through nullable Int32 so a
-#   NULL row emits an Arrow null (the oracle's len(NULL) semantics)
-#   instead of crashing the batch. Fixture results identical (the
-#   fixture has no NULLs); both re-enter by rule.
-# (Tier-0 total + 48 tier-1 must fit the ~50-slot window: VERDICT r17
-# item 1 demands the full 48-name r15-stale set rotates in, so this
-# round's tier-0 budget is exactly 2.)
-_MODIFIED_THIS_ROUND = frozenset(["pipeline_curriculum", "udf_pandas_tokens"])
-
-# Green last in CORRECTNESS_r15.json — 3 rounds stale, the full
-# 48-name set VERDICT r17 item 1 lists; they rotate into round 18's
-# window right after the tier-0 set (2 + 48 = exactly 50). After this
-# round's driver run nothing should be older than r16.
-_VERIFIED_R15_ONLY = frozenset(
-    """agg_histogram agg_sketch_cms agg_weighted_quantile
-    dedup_containment dedup_embedding dedup_ngram_jaccard dedup_url
-    events_attribution events_funnel fill_forward fn_array fn_datetime
-    fn_math_decimal fn_string fn_struct fn_url join_asof join_bloom
-    join_inner join_q2_shape join_semi_anti join_theta_range kmeans_lloyd
-    multimodal_resize pipeline_dedup_report
-    pipeline_pretrain_corpus pipeline_train_eval_split quality_classifier
-    recursive_reachability sample_temperature sim_ann_ivf sim_ann_lsh
-    sim_cosine_topk sim_maxsim stream_session stream_tumbling
-    text_hash_features text_langid text_quality text_stats text_tokens
-    topk_terms ts_ewma ts_resample win_lag win_range win_rank
-    win_running""".split()
-)
-
-# Green last in CORRECTNESS_r16.json — 2 rounds stale; any window
-# slots left after tier 0 + tier 1 fill from here in registration
-# order, the remainder roll to round 19. (udf_pandas_tokens —
-# r16-green — is EXCLUDED: its round-18 NULL-hardening moved it to
-# _MODIFIED_THIS_ROUND; the sets stay disjoint so the simulated window
-# arithmetic is exact.)
-_VERIFIED_R16_ONLY = frozenset(
-    """agg_approx agg_approx_percentile agg_bool_all agg_corr_exact
-    agg_distinct agg_percentile agg_sketch_kmv decontaminate_semantic
-    dedup_clusters dedup_semantic
-    dedup_simhash dedup_span_fraction events_paths events_pattern
-    events_retention events_rfm events_user_features filter_in_null
-    filter_pred fn_json grouping_sets multimodal_neardup
-    pipeline_embed_index pipeline_gopher_rules pipeline_media_corpus
-    profile_skew profile_table sample_coreset sample_importance
-    scan_project sim_ann_ivf_trained sim_hardneg sim_knn_graph
-    stream_sliding text_bm25 text_lines text_scrub
-    text_tfidf ts_anomaly udf_compat udf_compat_iterative
-    vocab_bpe_apply vocab_bpe_train win_dist
-    win_gaps_islands word_count""".split()
-)
-
-# Green (rows+schema+hash) in CORRECTNESS_r17.json — freshest; these
-# sit out round 18's window provided their code does not change.
-# (pipeline_curriculum — r17-green — is EXCLUDED: its round-18
-# NULL-hardening moved it to _MODIFIED_THIS_ROUND.)
-_VERIFIED_R17 = frozenset(
-    """agg_pivot agg_q1 agg_sketch_hll agg_skew_salted decontaminate
-    dedup_exact dedup_incremental dedup_incremental_minhash
-    dedup_minhash dedup_paragraph dedup_substring dsir_select
-    events_transitions fn_map global_sort graph_pagerank graph_triangles
-    grouping_cube grouping_rollup join_broadcast join_multi join_outer
-    join_skew_salted lm_next_token min_unique_prefix mixture_weights
-    multimodal_decode multimodal_dedup multimodal_frames multimodal_meta
-    pipeline_clean_corpus pipeline_pack_sequences
-    pipeline_preference_pairs rank_fusion sample_reservoir
-    sample_stratified set_ops sim_ann_pq source_stats text_chunks
-    text_diversity text_fingerprint text_lm_score text_repetition
-    text_split topk_per_group unpivot_measures vocab_fertility
-    vocab_pair_counts""".split()
-)
-
-
-def _staleness_tier(name: str) -> int:
-    """0 = needs verification now … 3 = freshest verification."""
-    if name in _MODIFIED_THIS_ROUND:
-        return 0
-    if name in _VERIFIED_R15_ONLY:
-        return 1
-    if name in _VERIFIED_R16_ONLY:
-        return 2
-    if name in _VERIFIED_R17:
-        return 3
-    return 0  # never driver-verified
-
-
 def load_all_queries() -> None:
-    """Import every operator module so its @query decorators register,
-    then reorder the registry stalest-verification-first (see
-    _staleness_tier)."""
+    """Import every operator module so its @query decorators register.
+    The registry keeps import order."""
     # Imported lazily so `import spark_graft` stays cheap.
     from spark_graft.operators import (  # noqa: F401
         curriculum,
@@ -154,9 +46,3 @@ def load_all_queries() -> None:
         relational,
     )
 
-    # stable sort: queries keep their relative registration order
-    # within each staleness tier
-    ordered = sorted(REGISTRY, key=_staleness_tier)
-    snapshot = dict(REGISTRY)
-    REGISTRY.clear()
-    REGISTRY.update({n: snapshot[n] for n in ordered})

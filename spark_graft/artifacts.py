@@ -34,13 +34,12 @@ parquet is still a plain dataset any engine (or a Spark read at serve
 time) can load.
 
 Fingerprint validation: meta records
-`clustering._data_fingerprint(sf_dir, table)` of the TRAINING table
+`_data_fingerprint(sf_dir, table)` of the TRAINING table
 (documents for merges, embeddings for centroids/codebooks). Loading
 with a `sf_dir` recomputes and compares — serving an artifact against
 the corpus it was trained on is validated for free, and a stale
 artifact after an overwrite raises `ArtifactMismatch` instead of
-silently serving wrong codes (the same staleness contract as the
-in-process centroid memo). Cross-corpus serving — the actual
+silently serving wrong codes. Cross-corpus serving — the actual
 train-once/serve-many case — passes `validate=False` (or no sf_dir),
 which skips the comparison but still checks kind and format_version.
 `validate` defaults to None = "validate iff sf_dir is given"; an
@@ -53,8 +52,6 @@ from __future__ import annotations
 import json
 import os
 from typing import Any
-
-from spark_graft.operators.clustering import _data_fingerprint
 
 FORMAT_VERSION = 1
 
@@ -75,6 +72,33 @@ _KINDS = {
 class ArtifactMismatch(ValueError):
     """Artifact kind/version/fingerprint does not match what the caller
     asked to serve."""
+
+
+def _data_fingerprint(sf_dir: str, table_name: str) -> tuple:
+    """Cheap change detector for the `table_name` table at `sf_dir`:
+    (path, mtime_ns, size) of the parquet file, or of every part file
+    when it is a directory. Never reads data pages. Part files are
+    keyed by their path RELATIVE to the dataset root and the whole
+    list is sorted (ADVICE r9: bare basenames collide across
+    partition subdirectories, and os.walk's traversal order is
+    unspecified — both could alias two different datasets or cause
+    spurious mismatches)."""
+    path = os.path.join(sf_dir, f"{table_name}.parquet")
+    try:
+        if os.path.isdir(path):
+            out = []
+            for root, _, files in os.walk(path):
+                for f in files:
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    out.append(
+                        (os.path.relpath(full, path), st.st_mtime_ns, st.st_size)
+                    )
+            return tuple(sorted(out))
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    except OSError:
+        return ("unstatable",)  # non-local paths
 
 
 def _jsonable(v: Any) -> Any:

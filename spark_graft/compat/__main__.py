@@ -4,8 +4,10 @@
 
 Reads one word per line (blank lines dropped, MapReduce.h:227-241), runs
 the iterative minimal-unique-prefix driver on the MapReduce-compat shim
-— one shim job per candidate length, exactly like main.cpp:30-68 — and
-prints the reference's output line ("Minimal prefix len = N").
+— each shim job is the reference's job at one candidate length
+(main.cpp:30-68), and the driver gallops then bisects the length, so it
+runs O(log answer) jobs over the once-cached input — and prints the
+reference's output line ("Minimal prefix len = N").
 """
 
 from __future__ import annotations

@@ -57,13 +57,7 @@ class MapReduce:
         the reference's final `output` file (MapReduce.h:109-124)."""
         if self._mapper is None or self._reducer is None:
             raise RuntimeError("set_mapper and set_reducer first")
-        sc = spark.sparkContext
-        if hasattr(lines, "rdd"):  # DataFrame of one string column
-            rdd = lines.rdd.map(lambda row: row[0])
-        elif hasattr(lines, "mapPartitions"):  # already an RDD
-            rdd = lines
-        else:
-            rdd = sc.parallelize(list(lines), self.mappers_count)
+        rdd = _as_rdd(spark, lines, self.mappers_count)
         mapper, reducer = self._mapper, self._reducer
 
         pairs = (
@@ -110,68 +104,67 @@ def mapreduce(
     return mr.run_on_lines(spark, lines)
 
 
+def _as_rdd(spark: SparkSession, lines, mappers_count: int = 4):
+    """An RDD of strings from an iterable, an RDD or a one-string-column
+    DataFrame."""
+    if hasattr(lines, "rdd"):  # DataFrame of one string column
+        return lines.rdd.map(lambda row: row[0])
+    if hasattr(lines, "mapPartitions"):  # already an RDD
+        return lines
+    return spark.sparkContext.parallelize(list(lines), mappers_count)
+
+
 def min_unique_prefix_mr(
     spark: SparkSession, lines, max_len: int, reducers_count: int = 4
 ) -> int | None:
-    """The reference's full iterative driver (main.cpp:28-68) on the
-    shim: one MapReduce job per candidate prefix length, reading the
-    job's outputs to decide convergence (any "0" -> try longer)."""
-    prefix_len = 1
-    while prefix_len <= max_len:
-        mapper = _prefix_mapper(prefix_len)
-        outputs = mapreduce(
-            spark, lines, mapper, _dup_reducer, reducers_count=reducers_count
-        )
-        if all(o == "1" for o in outputs):  # main.cpp:56-66 convergence read
-            return prefix_len
-        prefix_len += 1
-    return None
+    """The reference's iterative driver (main.cpp:28-68) on the shim:
+    each job is exactly the reference's job at one candidate prefix
+    length, and the driver reads the job's outputs to decide
+    convergence (any "0" -> the length is too short).
 
+    The driver gallops 1, 2, 4, ... and then bisects instead of scanning
+    lengths one by one. This gives the same answer because the predicate
+    is monotone in L: if two words differ within their first L
+    characters they also differ within their first L+1. O(log answer)
+    jobs instead of O(answer): at answer 16 that is 8 jobs, not 16, and
+    on a cluster each saved job is a full map+shuffle+reduce over the
+    input. The input is cached once for all jobs (the reference re-reads
+    its input file every job — caching changes cost, not semantics).
 
-def min_unique_prefix_mr_bsearch(
-    spark: SparkSession, lines, max_len: int, reducers_count: int = 4
-) -> int | None:
-    """Job-count-optimal variant of the iterative driver: identical
-    per-job semantics (each job is exactly the reference's job at that
-    candidate length), but the DRIVER galloping+binary-searches the
-    length instead of scanning linearly.
-
-    Safe because the convergence predicate is monotone in L: if two
-    words differ within their first L characters they also differ within
-    their first L+1, so "all length-L prefixes distinct" implies the
-    same at every longer length. O(log answer) jobs instead of
-    O(answer) — at answer=18 that is 7 jobs, not 18, and on a real
-    cluster each saved job is a full map+shuffle+reduce over the input.
-    Equivalence to the linear driver is property-tested
-    (tests/test_compat.py)."""
+    Returns None when no length up to `max_len` works: exact duplicates,
+    on which the reference loops forever."""
+    if max_len < 1:
+        return None
+    rdd = _as_rdd(spark, lines).cache()
 
     def all_distinct_at(prefix_len: int) -> bool:
         outputs = mapreduce(
             spark,
-            lines,
+            rdd,
             _prefix_mapper(prefix_len),
             _dup_reducer,
             reducers_count=reducers_count,
         )
-        return all(o == "1" for o in outputs)
+        return all(o == "1" for o in outputs)  # main.cpp:56-66
 
-    if max_len < 1:
-        return None
-    # Gallop 1, 2, 4, ... until the predicate holds; a failure at
-    # max_len means exact duplicates exist and no length works.
-    lo, hi = 0, 1  # invariant: predicate false at lo (0 vacuously)
-    while not all_distinct_at(hi):
-        if hi >= max_len:
-            return None
-        lo, hi = hi, min(hi * 2, max_len)
-    # Bracket (lo, hi]: false at lo, true at hi. Binary search.
-    while hi - lo > 1:
-        mid = (lo + hi) // 2
-        if all_distinct_at(mid):
-            hi = mid
-        else:
-            lo = mid
-    return hi
+    try:
+        # Gallop 1, 2, 4, ... until the predicate holds; a failure at
+        # max_len means exact duplicates exist and no length works.
+        lo, hi = 0, 1  # invariant: predicate false at lo (0 vacuously)
+        while not all_distinct_at(hi):
+            if hi >= max_len:
+                return None
+            lo, hi = hi, min(hi * 2, max_len)
+        # Bracket (lo, hi]: false at lo, true at hi. Binary search.
+        while hi - lo > 1:
+            mid = (lo + hi) // 2
+            if all_distinct_at(mid):
+                hi = mid
+            else:
+                lo = mid
+        return hi
+    finally:
+        rdd.unpersist()
 
 
 def _prefix_mapper(prefix_len: int) -> Mapper:

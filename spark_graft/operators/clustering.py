@@ -275,12 +275,14 @@ class _BroadcastAssigner:
             pass
 
 
-# Serving-path broadcast assigners, keyed on centroid CONTENT, so
-# repeated serving queries over one trained quantizer reuse a single
-# broadcast instead of leaking one per call (ADVICE r9: make_assigner
-# used to create a fresh k x dim broadcast per invocation and never
-# unpersist it). Training-loop assigners bypass this cache (transient=
-# True) and are destroyed as soon as their round's job has collected.
+# Serving-path broadcast assigners (k >= SPARK_GRAFT_HIER_K_MIN only),
+# keyed on centroid CONTENT, so repeated serving queries over one
+# trained quantizer reuse a single broadcast instead of leaking one per
+# call (ADVICE r9: make_assigner used to create a fresh k x dim
+# broadcast per invocation and never unpersist it). This owns broadcast
+# LIFETIME, not results: the centroids are trained by every call.
+# Training-loop assigners bypass this cache (transient=True) and are
+# destroyed as soon as their round's job has collected.
 _BC_ASSIGNER_CACHE: dict[tuple, _BroadcastAssigner] = {}
 
 
@@ -323,10 +325,10 @@ def make_assigner(
     if spark is not None and len(cents) >= _hier_k_min():
         sc = spark.sparkContext
         if not transient:
-            # key includes the SparkContext identity: _CENTROID_MEMO is
-            # plain data and survives a session restart, but a cached
-            # broadcast belongs to the STOPPED context — reusing it
-            # would fail with "Broadcast used after SparkContext
+            # key includes the SparkContext identity: the same centroid
+            # matrix can be served again after a session restart, but a
+            # cached broadcast belongs to the STOPPED context — reusing
+            # it would fail with "Broadcast used after SparkContext
             # shutdown" instead of rebroadcasting under the new one
             key = (sc.applicationId, *_cents_key(parts[0], parts[1]))
             cached = _BC_ASSIGNER_CACHE.get(key)
@@ -436,55 +438,6 @@ def _update_stats(
         assigner.release()
 
 
-# (sf_dir, k, data fingerprint) -> trained centroids. Training is
-# deterministic in the data, so the four quantizer consumers
-# (kmeans_lloyd, sim_ann_ivf_trained, dedup_embedding, sim_knn_graph)
-# share one training run per (dataset, k) instead of re-reading the
-# embeddings table each. Cache payload is k x dim ints. The fingerprint
-# (mtime_ns + size of the parquet file(s)) makes overwriting a path's
-# parquet within one driver process retrain instead of silently serving
-# stale centroids (ADVICE r8); `clear_centroid_memo()` is the explicit
-# hook for callers that bypass the filesystem (e.g. in-memory temp
-# views).
-_CENTROID_MEMO: dict[tuple[str, int, tuple], dict[int, list[int]]] = {}
-
-
-def clear_centroid_memo() -> None:
-    _CENTROID_MEMO.clear()
-    for assigner in _BC_ASSIGNER_CACHE.values():
-        assigner.release()
-    _BC_ASSIGNER_CACHE.clear()
-
-
-def _data_fingerprint(sf_dir: str, table_name: str = "embeddings") -> tuple:
-    """Cheap change detector for the `table_name` table at `sf_dir`:
-    (path, mtime_ns, size) of the parquet file, or of every part file
-    when it is a directory. Never reads data pages. Part files are
-    keyed by their path RELATIVE to the dataset root and the whole
-    list is sorted (ADVICE r9: bare basenames collide across
-    partition subdirectories, and os.walk's traversal order is
-    unspecified — both could alias two different datasets or cause
-    spurious cache misses). The default table keeps every existing
-    centroid-memo call site byte-identical; spark_graft.artifacts
-    passes "documents" to fingerprint BPE training corpora."""
-    path = os.path.join(sf_dir, f"{table_name}.parquet")
-    try:
-        if os.path.isdir(path):
-            out = []
-            for root, _, files in os.walk(path):
-                for f in files:
-                    full = os.path.join(root, f)
-                    st = os.stat(full)
-                    out.append(
-                        (os.path.relpath(full, path), st.st_mtime_ns, st.st_size)
-                    )
-            return tuple(sorted(out))
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return ("unstatable",)  # non-local paths: memo per (sf_dir, k) only
-
-
 def lloyd_centroids(
     spark: SparkSession, sf_dir: str, k: int = K, dim: int | None = None
 ) -> dict[int, list[int]]:
@@ -496,16 +449,13 @@ def lloyd_centroids(
     `k` defaults to the fixed K=8 of kmeans_lloyd / sim_ann_ivf_trained;
     dedup_embedding passes a data-derived k (~n / target cell size) so
     its blocking cells stay constant-sized as the corpus grows — and the
-    `dim` it already knows, saving the lookup job. Results are memoized
-    per (sf_dir, k, data fingerprint) — see _CENTROID_MEMO."""
-    memo_key = (sf_dir, k, _data_fingerprint(sf_dir))
-    if memo_key in _CENTROID_MEMO:
-        return _CENTROID_MEMO[memo_key]
+    `dim` it already knows, saving the lookup job. Every call trains;
+    a caller that serves one training many times persists it with
+    spark_graft.artifacts."""
     emb = table(spark, sf_dir, "embeddings")
     if dim is None:
         first = emb.select(F.size("embedding")).first()
         if first is None:  # zero vectors: nothing to train on
-            _CENTROID_MEMO[memo_key] = {}
             return {}
         dim = int(first[0])
     seed = (
@@ -521,7 +471,6 @@ def lloyd_centroids(
             int(r["cluster"]): [int(r[f"s{i}"]) // int(r["n"]) for i in range(dim)]
             for r in stats
         }
-    _CENTROID_MEMO[memo_key] = cents
     return cents
 
 
@@ -570,7 +519,13 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer. The oracle re-derives the same rounds relationally
     (position-exploded join instead of array ops) — two independent
     implementations, one hash."""
-    cents = lloyd_centroids(spark, sf_dir)
+    return kmeans_assign(spark, sf_dir, lloyd_centroids(spark, sf_dir))
+
+
+def kmeans_assign(
+    spark: SparkSession, sf_dir: str, cents: dict[int, list[int]]
+) -> DataFrame:
+    """(vec_id, cluster, d2): each vector's nearest of `cents`."""
     return (
         table(spark, sf_dir, "embeddings")
         .select("vec_id", assignment_udf(cents, spark)("embedding").alias("b"))

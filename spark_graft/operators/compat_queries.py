@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_graft.compat.mapreduce import mapreduce, min_unique_prefix_mr_bsearch
+from spark_graft.compat.mapreduce import mapreduce, min_unique_prefix_mr
 from spark_graft.registry import query
 from spark_graft.sources import table
 
@@ -54,21 +54,13 @@ def udf_compat_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence read — per candidate prefix length, until every reducer
     reports all prefixes distinct. udf_compat checks a single fixed
     length; this runs the complete loop, so the oracle is the same
-    minimal-unique-prefix SQL as the flagship. Each job is exactly the
-    reference's job at its candidate length, but the driver
-    gallop+binary-searches the length (the predicate is monotone in L)
-    instead of scanning linearly like main.cpp:28-68 — O(log answer)
-    full map/shuffle/reduce passes over the input instead of O(answer),
-    which is the difference between 7 and 18 cluster-wide jobs here.
-    The linear reference driver is kept as min_unique_prefix_mr and
-    property-tested equivalent. The input RDD is cached across
-    iterations (the reference re-reads its input file every job —
-    caching changes cost, not semantics)."""
+    minimal-unique-prefix SQL as the flagship. It is the same driver the
+    `python -m spark_graft.compat` CLI runs (compat.min_unique_prefix_mr):
+    the driver gallop+binary-searches the length (the predicate is
+    monotone in L) instead of scanning linearly like main.cpp:28-68, so
+    it runs O(log answer) full map/shuffle/reduce passes over the cached
+    input instead of O(answer)."""
     names = table(spark, sf_dir, "customer").select("c_name")
     max_len = names.agg(F.max(F.length("c_name"))).collect()[0][0] or 0
-    lines = names.rdd.map(lambda row: row[0]).cache()
-    try:
-        result = min_unique_prefix_mr_bsearch(spark, lines, max_len)
-    finally:
-        lines.unpersist()
+    result = min_unique_prefix_mr(spark, names, max_len)
     return spark.createDataFrame([(result,)], "min_prefix_len bigint")

@@ -462,11 +462,9 @@ def preference_rating(
     """Bradley-Terry ratings over the corpus's own noisy judgment
     stream: chains `preference_judgments` (the KxK best-x-worst cross
     per source with ~20% md5-flipped judgments) into
-    `preference_rating_frame`. NOT yet a declared @query — r18 lands
-    it pytest-only (differential vs `preference_rating_oracle` +
-    planted-transitivity properties) because the round's driver-window
-    budget is consumed by the staleness rotation; declaration is
-    queued for r19 (VERDICT r17 item 5)."""
+    `preference_rating_frame`. NOT a declared @query: it is tested
+    pytest-only (differential vs `preference_rating_oracle` +
+    planted-transitivity properties)."""
     return preference_rating_frame(
         preference_judgments(spark, sf_dir), rounds=rounds
     )

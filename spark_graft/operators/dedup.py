@@ -1698,8 +1698,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lazy (r19): the collapse gate's scalar job below is the first
         # action, so ONE job materializes the checkpoint and returns
         # the two gate scalars (the same fusion as
-        # connected_components' convergence read); under
-        # "always"/"never" the first downstream job materializes it
+        # connected_components' convergence read)
         .localCheckpoint(eager=False)
     )
     # GATE the exact-duplicate collapse on the MEASURED dup rate
@@ -1711,22 +1710,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed per-doc sets; either branch yields the identical
     # result (singleton groups == no collapse), so the gate is a pure
     # physical-plan decision — hash-stable by construction.
-    mode = os.environ.get("SPARK_GRAFT_CONTAIN_COLLAPSE", "auto")
-    if mode not in ("auto", "always", "never"):
-        raise ValueError(
-            f"SPARK_GRAFT_CONTAIN_COLLAPSE={mode!r}: expected auto/always/never"
-        )
-    if mode == "auto":
-        n_docs, n_distinct = doc_sets.select(
-            F.count(F.lit(1)), F.countDistinct("fp")
-        ).first()
-        collapse = (
-            (n_docs - n_distinct) * CONTAIN_COLLAPSE_DEN
-            > n_docs * CONTAIN_COLLAPSE_NUM
-        )
-    else:  # "always" / "never": characterization + operator override
-        collapse = mode == "always"
-    if collapse:
+    n_docs, n_distinct = doc_sets.select(
+        F.count(F.lit(1)), F.countDistinct("fp")
+    ).first()
+    if (n_docs - n_distinct) * CONTAIN_COLLAPSE_DEN > n_docs * CONTAIN_COLLAPSE_NUM:
         groups = (
             doc_sets.groupBy("fp")
             .agg(

@@ -647,41 +647,6 @@ def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ flagship: min unique prefix
 
 
-def min_unique_prefix_len(spark: SparkSession, strings_df: DataFrame, col: str) -> int | None:
-    """Iterative driver loop of the reference's flagship job (main.cpp:
-    28-68): find minimal L such that all length-L prefixes are distinct.
-
-    Each iteration is one Spark job — groupBy(substring(c,1,L)) with a
-    short-circuit `any duplicate?` aggregate, mirroring mapper
-    main.cpp:35-38 (substr clamps for short strings — so does Spark's
-    substring) and reducer main.cpp:44-49 (adjacent-equal detection; here
-    the algebraic form max(count)>1). The input is cached across
-    iterations (the reference re-reads its input file every job).
-    Returns None when no finite prefix works (exact duplicates — the
-    reference would loop forever; FIXTURES.md §A mandates reporting
-    'no finite prefix' instead).
-    """
-    df = strings_df.select(F.col(col).alias("s")).cache()
-    try:
-        max_len_row = df.agg(F.max(F.length("s")).alias("m")).collect()[0]
-        max_len = max_len_row["m"] or 0
-        length = 1
-        while length <= max_len:
-            dup = (
-                df.groupBy(F.substring("s", 1, length).alias("p"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup == 0:
-                return length
-            length += 1
-        return None
-    finally:
-        df.unpersist()
-
-
 @query(
     "min_unique_prefix",
     oracle="""
@@ -700,12 +665,12 @@ def min_unique_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-first form: ONE job checks every candidate length at once —
     explode rows x lengths 1..maxlen, count duplicates per (L, prefix),
     take the smallest clean L. The reference runs one full MapReduce per
-    candidate L (main.cpp:30-68 — 18 sequential jobs on this data); that
-    faithful iterative loop is preserved as min_unique_prefix_len (used
-    by the golden tests) and compat.min_unique_prefix_mr. Same total
-    scan work in the worst case, but no per-iteration job scheduling,
-    and all lengths shuffle in parallel. substring clamps for short
-    strings exactly like std::substr (main.cpp:35-38)."""
+    candidate L (main.cpp:30-68 — 18 sequential jobs on this data); the
+    iterative form on the RDD shim is compat.min_unique_prefix_mr, which
+    runs one reference job per probed length and bisects the length.
+    Same total scan work in the worst case, but no per-iteration job
+    scheduling, and all lengths shuffle in parallel. substring clamps
+    for short strings exactly like std::substr (main.cpp:35-38)."""
     cust = table(spark, sf_dir, "customer").select(F.col("c_name").alias("s"))
     max_len = cust.agg(F.max(F.length("s"))).collect()[0][0] or 0
     if max_len == 0:

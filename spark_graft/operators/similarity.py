@@ -22,6 +22,7 @@ from spark_graft.operators.clustering import (
     Q_SHIFT,
     _QV,
     assignment_udf,
+    kmeans_assign,
     lloyd_centroids,
     quantize_vec,
 )
@@ -1291,7 +1292,6 @@ def pipeline_embed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled kmeans CTEs + probe/rescore CTEs composed into one SQL
     statement — the whole four-stage pipeline is hash-gated
     end-to-end."""
-    from spark_graft.operators.clustering import kmeans_lloyd
     from spark_graft.operators.dedup import dedup_semantic
 
     # the probe-existence check runs FIRST: an empty/all-zero-norm
@@ -1311,11 +1311,13 @@ def pipeline_embed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
         .localCheckpoint()
     )
+    # one training serves both the assignment and the probe selection
+    cents = lloyd_centroids(spark, sf_dir)
     # the POSTINGS table (survivor -> cell, with assignment distance) is
     # the second staged asset: three consumers read it (cell stats,
     # index size, probe-side membership), and without the stage each
     # re-executes the Arrow assignment map over the full corpus
-    imem = kmeans_lloyd(spark, sf_dir).join(keep, "vec_id").localCheckpoint()
+    imem = kmeans_assign(spark, sf_dir, cents).join(keep, "vec_id").localCheckpoint()
     stats = (
         imem.groupBy("cluster")
         .agg(
@@ -1325,8 +1327,6 @@ def pipeline_embed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cluster", "cluster_n", F.col("_rep.vec_id").alias("rep_vec_id"))
     )
     isize = imem.agg(F.count(F.lit(1)).alias("index_size"))
-
-    cents = lloyd_centroids(spark, sf_dir)
     probe_clusters = _nearest_trained_clusters(cents, probe)
 
     e = table(spark, sf_dir, "embeddings").filter(nonzero_vec(F.col("embedding")))

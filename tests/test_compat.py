@@ -3,6 +3,8 @@ quirks (SURVEY.md §2a), verified one by one."""
 
 from __future__ import annotations
 
+import pytest
+
 from spark_graft.compat.mapreduce import MapReduce, mapreduce
 
 
@@ -81,3 +83,24 @@ def test_cli_matches_reference_output(spark, tmp_path, capsys):
     rc = main(["prog", str(src), "2", "2"])
     assert rc == 0
     assert capsys.readouterr().out.strip() == "Minimal prefix len = 3"
+
+
+@pytest.mark.parametrize(
+    "text,expected",
+    [
+        # the L=1 job still runs, every reducer vacuously reports "1",
+        # and the reference prints 1 (main.cpp:30-68)
+        ("", "1"),
+        # exact duplicates have no finite answer (the reference loops
+        # forever); the driver stops at the longest line
+        ("same@x.io\nother@y.io\nsame@x.io\n", "None"),
+    ],
+    ids=["empty", "exact_duplicates"],
+)
+def test_cli_degenerate_files(spark, tmp_path, capsys, text, expected):
+    from spark_graft.compat.__main__ import main
+
+    src = tmp_path / "words.txt"
+    src.write_text(text)
+    assert main(["prog", str(src), "2", "2"]) == 0
+    assert capsys.readouterr().out.strip() == f"Minimal prefix len = {expected}"

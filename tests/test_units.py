@@ -72,11 +72,12 @@ def test_simhash_similar_docs_close(spark):
 
 
 def test_min_unique_prefix_none_branch_short_circuit(spark):
-    """Duplicates bounded by max length — terminates (no ref-style hang)."""
-    from spark_graft.operators.relational import min_unique_prefix_len
+    """Duplicates bounded by max length — terminates (no ref-style hang)
+    on a one-column DataFrame, the input shape the CLI passes."""
+    from spark_graft.compat.mapreduce import min_unique_prefix_mr
 
     df = spark.createDataFrame([("zz",)] * 5, "s string")
-    assert min_unique_prefix_len(spark, df, "s") is None
+    assert min_unique_prefix_mr(spark, df, max_len=2) is None
 
 
 def test_pivot_empty_cells_zero_filled(spark):
@@ -760,45 +761,14 @@ def test_dedup_embedding_identical_on_broadcast_path(spark, sf_dir, monkeypatch)
     quantizer assignment runs through the large-k broadcast path (the
     training loop's _update_stats AND the serving assignment both
     switch)."""
-    from spark_graft.operators import clustering as cl
     from spark_graft.registry import REGISTRY
 
     fn = REGISTRY["dedup_embedding"].fn
     flat = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert flat  # the planted near-dups exist at sf0.001
     monkeypatch.setenv("SPARK_GRAFT_HIER_K_MIN", "1")
-    cl.clear_centroid_memo()  # force retraining through the new path
-    try:
-        hier = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    finally:
-        cl.clear_centroid_memo()  # don't leak hier-trained memo entries
+    hier = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert flat == hier
-
-
-def test_centroid_memo_invalidates_on_regenerated_parquet(spark, tmp_path):
-    """ADVICE r8: overwriting a path's embeddings parquet within one
-    driver process must retrain (memo keyed on a data fingerprint), not
-    silently serve the first training's centroids."""
-    from spark_graft.operators.clustering import lloyd_centroids
-
-    d = tmp_path / "memo"
-
-    def write(scale):
-        spark.createDataFrame(
-            [
-                (i, [float(((i * 7 + j) % 13) - 6) * scale / 16.0 for j in range(4)])
-                for i in range(40)
-            ],
-            "vec_id bigint, embedding array<float>",
-        ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-
-    write(1.0)
-    first = lloyd_centroids(spark, str(d), k=4)
-    again = lloyd_centroids(spark, str(d), k=4)
-    assert first == again  # memo hit on unchanged data
-    write(0.5)
-    retrained = lloyd_centroids(spark, str(d), k=4)
-    assert retrained != first
 
 
 def test_kmv_estimates_within_error_and_theta_law(spark, sf_dir):
